@@ -16,11 +16,11 @@ import graft.functions.TextAnalysis
   *    model): each segment is one corpus-count shuffle materialized
   *    as postings parquet partitioned by a stable term bucket (first
   *    byte of md5(term) — engine- and run-independent), plus a
-  *    one-row stats table holding ADDITIVE moments (n, sum_len).
-  *    Stats are written LAST and are the segment's commit marker: a
-  *    crashed build/append leaves a stats-less segment every read
-  *    skips, so search never serves a half-written segment
-  *    (the registry discipline of [[Dedup.incrementalExactDedup]]).
+  *    stats doc holding ADDITIVE moments (n, sum_len, n_text) and the
+  *    postings schema. Stats are written LAST and are the segment's
+  *    commit marker: a crashed build/append leaves a stats-less
+  *    segment every read skips, so search never serves a half-written
+  *    segment (the registry discipline of [[Dedup.incrementalExactDedup]]).
   *  - [[searchTopK]] reads ONLY the query terms' buckets of each
   *    committed segment — directory pruning at planning time
   *    (spec-pinned) plus a parquet `term IN (...)` pushdown. Query
@@ -74,19 +74,6 @@ object InvertedIndex {
   private def fsOf(spark: SparkSession, path: String) =
     SegmentStore.fsOf(spark, path)
 
-  /** Committed segment dirs (stats marker present), sorted. */
-  private[operators] def committedSegments(spark: SparkSession,
-                                indexPath: String): Seq[String] =
-    SegmentStore.committedSegments(spark, indexPath)
-
-  /** Committed tombstone batch dirs under `deletes/` — same stats-last
-    * commit marker as segments, so a crashed [[deleteDocs]] is
-    * invisible to every reader.
-    */
-  private[operators] def committedDeletes(spark: SparkSession,
-                               indexPath: String): Seq[String] =
-    SegmentStore.committedDeletes(spark, indexPath)
-
   /** Write one immutable segment: postings first, stats last (the
     * commit marker).
     */
@@ -96,6 +83,12 @@ object InvertedIndex {
                            analyzer: String): Unit =
     writeSegmentNamed(docs, idCol, textCol, indexPath,
       s"seg-${java.util.UUID.randomUUID()}", buckets, positions, analyzer)
+
+  /** An appended segment, in the layout of an existing one. */
+  private def writeSegment(docs: DataFrame, idCol: String, textCol: String,
+                           indexPath: String, like: SegStatsDoc): Unit =
+    writeSegment(docs, idCol, textCol, indexPath, like.buckets,
+      like.positions, like.analyzer)
 
   private def writeSegmentNamed(docs: DataFrame, idCol: String,
                                 textCol: String, indexPath: String,
@@ -156,7 +149,8 @@ object InvertedIndex {
     val ur = SegmentStore.labeled(ss, "idx seg: tokenize+contract agg")(
       staged.agg(count(lit(1)).as("_n"),
         count_distinct(col("id")).as("_d"),
-        coalesce(sum(col("len")), lit(0.0)).as("_sum")).head())
+        coalesce(sum(col("len")), lit(0.0)).as("_sum"),
+        count(col("len")).as("_text")).head())
     require(ur.getLong(0) == ur.getLong(1),
       s"batch contains duplicate ids (${ur.getLong(0)} rows, " +
         s"${ur.getLong(1)} distinct) — collapse to one row per id " +
@@ -206,122 +200,134 @@ object InvertedIndex {
     // as the driver-side stats doc (marker last; see
     // [[SegmentStore.writeDocDir]])
     writeSegStats(staged.sparkSession, seg, ur.getLong(0).toDouble,
-      ur.getDouble(2), buckets, positions, analyzer)
+      ur.getDouble(2), ur.getLong(3).toDouble, buckets, positions,
+      analyzer, postings.schema)
   }
 
+  /** The segment's commit doc. `n_text` counts the docs whose text
+    * is non-null: the length average divides by it (a null text has
+    * no length, the [[Ranking.bm25TopK]] rule) while `n` — every doc —
+    * is the idf's N. `schema` is the postings schema every reader
+    * passes to `spark.read.schema`.
+    */
   private def writeSegStats(spark: SparkSession, seg: String, n: Double,
-                            sumLen: Double, buckets: Int,
-                            positions: Boolean, analyzer: String): Unit =
+                            sumLen: Double, nText: Double, buckets: Int,
+                            positions: Boolean, analyzer: String,
+                            schema: org.apache.spark.sql.types.StructType)
+      : Unit =
     SegmentStore.writeDocDir(fsOf(spark, seg), s"$seg/stats",
       org.json4s.JObject(
+        "format" -> org.json4s.JInt(SegmentStore.Format),
         "n" -> org.json4s.JDouble(n),
         "sum_len" -> org.json4s.JDouble(sumLen),
+        "n_text" -> org.json4s.JDouble(nText),
         "buckets" -> org.json4s.JInt(buckets),
         "positions" -> org.json4s.JBool(positions),
-        "analyzer" -> org.json4s.JString(analyzer)))
+        "analyzer" -> org.json4s.JString(analyzer),
+        "schema" -> org.json4s.JString(schema.json)))
 
-  /** One committed segment's stats, read DRIVER-SIDE (no Spark job —
-    * the stats sidecar is one JSON doc since r17-opt; a legacy parquet
-    * stats dir reads through the Spark fallback). Missing fields
-    * follow the mixed-generation rules: absent positions reads false,
-    * absent analyzer reads "standard".
+  /** One committed segment's stats doc, read driver-side (no Spark
+    * job).
     */
-  private[operators] final case class SegStatsDoc(n: Double, sumLen: Double,
-                                                  buckets: Int,
-                                                  positions: Boolean,
-                                                  analyzer: String)
+  private[operators] final case class SegStatsDoc(
+      n: Double, sumLen: Double, nText: Double, buckets: Int,
+      positions: Boolean, analyzer: String,
+      schema: org.apache.spark.sql.types.StructType)
 
-  private def readSegStats(spark: SparkSession, seg: String): SegStatsDoc =
-    SegmentStore.readDocDir(fsOf(spark, seg), s"$seg/stats") match {
-      case Some(doc) =>
-        val analyzer = (doc \ "analyzer") match {
-          case org.json4s.JString(s) => s
-          case _ => "standard"
-        }
-        val positions = (doc \ "positions") match {
-          case org.json4s.JBool(b) => b
-          case _ => false
-        }
-        SegStatsDoc(SegmentStore.docDouble(doc, "n"),
-          SegmentStore.docDouble(doc, "sum_len"),
-          SegmentStore.docDouble(doc, "buckets").toInt,
-          positions, analyzer)
-      case None => // legacy parquet one-row stats
-        val r = SegmentStore.labeled(spark, "idx: legacy stats read")(
-          spark.read.parquet(s"$seg/stats").collect().head)
-        val fields = r.schema.fieldNames
-        val positions = fields.contains("positions") &&
-          !r.isNullAt(r.fieldIndex("positions")) &&
-          r.getBoolean(r.fieldIndex("positions"))
-        val analyzer =
-          if (fields.contains("analyzer") &&
-              !r.isNullAt(r.fieldIndex("analyzer")))
-            r.getString(r.fieldIndex("analyzer"))
-          else "standard"
-        SegStatsDoc(r.getAs[Double]("n"), r.getAs[Double]("sum_len"),
-          r.getAs[Int]("buckets"), positions, analyzer)
-    }
-
-  /** A committed tombstone batch's charged moments (n, sum_len) —
-    * driver-side doc read with the legacy parquet fallback (a legacy
-    * vector-index tombstone has no sum_len; reads 0).
-    */
-  private def readDelStats(spark: SparkSession,
-                           del: String): (Double, Double) =
-    SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats") match {
-      case Some(doc) =>
-        val sl = (doc \ "sum_len") match {
-          case org.json4s.JNothing => 0.0
-          case _ => SegmentStore.docDouble(doc, "sum_len")
-        }
-        (SegmentStore.docDouble(doc, "n"), sl)
-      case None =>
-        val r = SegmentStore.labeled(spark, "idx: legacy tomb stats read")(
-          spark.read.parquet(s"$del/stats").collect().head)
-        val sl =
-          if (r.schema.fieldNames.contains("sum_len"))
-            r.getAs[Double]("sum_len")
-          else 0.0
-        (r.getAs[Double]("n"), sl)
-    }
-
-  /** (buckets, positions, analyzer) of an existing index — one
-    * driver-side stats-doc read of the first committed segment.
-    */
-  private def segMeta(spark: SparkSession,
-                      segs: Seq[String]): (Int, Boolean, String) = {
-    val st = readSegStats(spark, segs.head)
-    (st.buckets, st.positions, st.analyzer)
+  private def readSegStats(spark: SparkSession, seg: String): SegStatsDoc = {
+    val doc = SegmentStore.readCommitDoc(spark, seg)
+    def d(f: String) = SegmentStore.docDouble(doc, f)
+    val (org.json4s.JBool(positions), org.json4s.JString(analyzer)) =
+      (doc \ "positions", doc \ "analyzer"): @unchecked
+    SegStatsDoc(d("n"), d("sum_len"), d("n_text"), d("buckets").toInt,
+      positions, analyzer, SegmentStore.docSchema(doc))
   }
 
-  /** Whether the index stores positional postings — from the first
-    * committed segment's stats (uniform across segments because every
-    * writer derives it from here).
+  /** One committed segment as the searcher snapshot opened it
+    * ([[SegmentStore.openCommitted]]): its stats doc, read once, and
+    * its postings and lens relations, each built (and its files
+    * listed) once, on first use, with the recorded schema.
     */
-  private def indexPositions(spark: SparkSession,
-                             segs: Seq[String]): Boolean =
-    segs.nonEmpty && readSegStats(spark, segs.head).positions
+  private[operators] final class Segment(spark: SparkSession,
+                                         val path: String) {
+    val name: String = new org.apache.hadoop.fs.Path(path).getName
+    val stats: SegStatsDoc = readSegStats(spark, path)
+    lazy val postings: DataFrame =
+      spark.read.schema(stats.schema).parquet(s"$path/postings")
+    lazy val lens: DataFrame = SegmentStore.readLedger(spark, s"$path/lens",
+      Some(org.apache.spark.sql.types.StructType(
+        Seq(stats.schema("id"), stats.schema("len")))))
+  }
 
-  private def mergedPostings(spark: SparkSession, segs: Seq[String],
-                             prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(spark.read.parquet(s"$s/postings")))
-      .reduce(_ unionByName _)
-
-  /** [[mergedPostings]] with each segment's rows tagged by segment
-    * name (a literal — free), minus the tombstone pairs applicable to
-    * that segment. The tag exists so a tombstone kills an id only in
-    * its own scope: a re-ingested id's newer posting survives.
+  /** What one call sees of an index: the segments and tombstone
+    * batches committed when it listed, each opened once per commit
+    * generation in this session.
     */
-  private def mergedLivePostings(spark: SparkSession, segs: Seq[String],
-                                 dels: Seq[String],
-                                 prune: DataFrame => DataFrame): DataFrame =
-    segs.map(s => prune(spark.read.parquet(s"$s/postings"))
-        .withColumn("_seg", lit(new org.apache.hadoop.fs.Path(s).getName)))
-      .reduce(_ unionByName _)
-      .join(broadcast(tombstonePairs(spark, dels)),
-        Seq("id", "_seg"), "left_anti")
-      .drop("_seg")
+  private[operators] final case class View(path: String, segs: Seq[Segment],
+                                           dels: Seq[SegmentStore.Tombstone]) {
+    /** Tombstone-adjusted corpus moments + the shared bucket count and
+      * analyzer (uniform across segments: every writer inherits them
+      * from the first segment), from the opened docs — no I/O.
+      */
+    lazy val stats: LiveStats = {
+      val ss = segs.map(_.stats)
+      LiveStats(
+        ss.map(_.n).sum - dels.map(_.charge("n")).sum,
+        ss.map(_.sumLen).sum - dels.map(_.charge("sum_len")).sum,
+        ss.map(_.nText).sum - dels.map(_.charge("n_text")).sum,
+        ss.head.buckets, ss.head.analyzer)
+    }
 
+    def positions: Boolean = segs.nonEmpty && segs.head.stats.positions
+
+    /** The postings id field — the id type of typed empty results. */
+    def idField: org.apache.spark.sql.types.StructField =
+      segs.head.stats.schema("id")
+
+    /** Every segment's postings under `prune` (applied per segment so
+      * bucket-directory pruning happens at planning time), minus the
+      * tombstone pairs applicable to each segment. The segment tag (a
+      * literal — free) exists so a tombstone kills an id only in its
+      * own scope: a re-ingested id's newer posting survives.
+      */
+    def livePostings(prune: DataFrame => DataFrame): DataFrame =
+      if (dels.isEmpty) segs.map(s => prune(s.postings)).reduce(_ unionByName _)
+      else segs.map(s => prune(s.postings).withColumn("_seg", lit(s.name)))
+        .reduce(_ unionByName _)
+        .join(broadcast(SegmentStore.tombstonePairs(dels)),
+          Seq("id", "_seg"), "left_anti")
+        .drop("_seg")
+
+    /** The live postings of `terms` (already analyzed/distinct):
+      * bucket IN (...) prunes partition DIRECTORIES of every segment at
+      * planning time (spec-pinned), term IN (...) pushes to the parquet
+      * reader.
+      */
+    def prunedLivePostings(terms: Seq[String]): DataFrame = {
+      val wanted = terms.map(bucketOf(_, stats.buckets)).distinct
+      livePostings(_.filter(col("bucket").isin(wanted: _*))
+        .filter(col("term").isin(terms: _*)))
+    }
+  }
+
+  /** The index at `indexPath` as this call sees it — see [[View]]. */
+  private[operators] def view(spark: SparkSession, indexPath: String): View =
+    View(indexPath,
+      SegmentStore.openCommitted(spark, s"$indexPath/segments")(
+        new Segment(spark, _)),
+      SegmentStore.tombstones(spark, indexPath))
+
+  /** [[view]] for a read: fails LOUDLY on a never-built /
+    * crashed-before-first-commit index, where an empty result would
+    * read as "no matches".
+    */
+  private[operators] def searcher(spark: SparkSession,
+                                  indexPath: String): View = {
+    val v = view(spark, indexPath)
+    require(v.segs.nonEmpty,
+      s"$indexPath has no committed segments — build() first")
+    v
+  }
 
   /** Create a FRESH index at `indexPath` (any existing segments are
     * removed) holding one segment for `docs`.
@@ -355,7 +361,7 @@ object InvertedIndex {
 
   /** Tombstone documents — the Lucene delete model. The ids land in a
     * committed tombstone batch (`deletes/batch-<uuid>/` holding the id
-    * list plus a one-row stats table of the deleted (n, sum_len),
+    * list plus a stats doc of the deleted (n, sum_len, n_text),
     * charged EXACTLY against the per-segment `lens` ledgers; stats are
     * written LAST as the commit marker, so a crashed delete is
     * invisible). [[searchTopK]] subtracts tombstoned docs logically —
@@ -376,53 +382,44 @@ object InvertedIndex {
     * against the (bounded-between-compactions) tombstone set.
     */
   def deleteDocs(ids: DataFrame, indexPath: String): Unit = {
-    val spark = ids.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    deleteDocsScoped(ids, indexPath, segs)
-  }
-
-  /** [[deleteDocs]] against an explicit scope — the segments the
-    * tombstone applies to. [[ingestUpsertBatch]] passes a scope that
-    * EXCLUDES the batch's own (crashed, about-to-be-rewritten)
-    * segment; everything else uses the full committed set.
-    */
-  private def deleteDocsScoped(ids: DataFrame, indexPath: String,
-                               segs: Seq[String]): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a single-column frame, got ${ids.columns.toSeq}")
     val spark = ids.sparkSession
-    val del = ids.select(col(ids.columns.head).as("id"))
-      .distinct().localCheckpoint(true)
-    // deleting nothing is vacuous success — NOT a zero-id tombstone
-    // batch, which every search would broadcast and the next compact
-    // would treat as a full-rewrite trigger. One count serves the
-    // emptiness gate and the exact-match comparison below (r17-opt:
-    // the separate isEmpty probe was a second job on the same frame).
-    val nReq = del.count()
-    if (nReq == 0) return
-    // EXACT detector: matched rows AND matched distinct ids must both
-    // equal the request — aggregate row count alone would let an id
-    // live in two segments (rows > ids, an append-contract violation)
-    // compensate for an unknown id (ids < requested) and slip through.
-    // Per-frame semi-join (the tombstoneLiveOf shape): a compacted
-    // segment's id-bucketed lens charges the delete without a shuffle.
-    val hitRow = liveLensFrames(spark, segs,
-        committedDeletes(spark, indexPath))
-      .map(_.join(del, Seq("id"), "left_semi"))
-      .reduce(_ unionByName _)
-      .agg(count(lit(1)).cast("double").as("n"),
-        count_distinct(col("id")).cast("double").as("d"),
-        coalesce(sum(col("len")), lit(0.0)).as("sum_len")).head()
-    require(hitRow.getDouble(0).toLong == nReq &&
-        hitRow.getDouble(1).toLong == nReq,
-      s"deleteDocs: $nReq ids requested but ${hitRow.getDouble(0).toLong} " +
-        s"live rows over ${hitRow.getDouble(1).toLong} distinct ids " +
-        s"matched in $indexPath — unknown/already-tombstoned ids (or an " +
-        "id live in two segments) are contract violations")
-    writeTombstone(spark, indexPath, segs, del,
-      hitRow.getDouble(0), hitRow.getDouble(2))
+    val v = searcher(spark, indexPath)
+    SegmentStore.withLocalCheckpoint(
+        ids.select(col(ids.columns.head).as("id")).distinct()) { del =>
+      // deleting nothing is vacuous success — NOT a zero-id tombstone
+      // batch, which every search would broadcast and the next compact
+      // would treat as a full-rewrite trigger. One count serves the
+      // emptiness gate and the exact-match comparison below (r17-opt:
+      // the separate isEmpty probe was a second job on the same frame).
+      val nReq = del.count()
+      if (nReq > 0) {
+        // EXACT detector: matched rows AND matched distinct ids must
+        // both equal the request — aggregate row count alone would let
+        // an id live in two segments (rows > ids, an append-contract
+        // violation) compensate for an unknown id (ids < requested) and
+        // slip through. Per-frame semi-join (the tombstoneLiveOf
+        // shape): a compacted segment's id-bucketed lens charges the
+        // delete without a shuffle.
+        val hitRow = liveLensFrames(v.segs, v.dels)
+          .map(_.join(del, Seq("id"), "left_semi"))
+          .reduce(_ unionByName _)
+          .agg(count(lit(1)).cast("double").as("n"),
+            count_distinct(col("id")).cast("double").as("d"),
+            coalesce(sum(col("len")), lit(0.0)).as("sum_len"),
+            count(col("len")).cast("double").as("n_text")).head()
+        require(hitRow.getDouble(0).toLong == nReq &&
+            hitRow.getDouble(1).toLong == nReq,
+          s"deleteDocs: $nReq ids requested but " +
+            s"${hitRow.getDouble(0).toLong} live rows over " +
+            s"${hitRow.getDouble(1).toLong} distinct ids matched in " +
+            s"$indexPath — unknown/already-tombstoned ids (or an id live " +
+            "in two segments) are contract violations")
+        writeTombstone(spark, indexPath, v.segs, del,
+          hitRow.getDouble(0), hitRow.getDouble(2), hitRow.getDouble(3))
+      }
+    }
   }
 
   /** Commit one tombstone batch: ids, then scope, then stats LAST (the
@@ -435,18 +432,11 @@ object InvertedIndex {
     * clears tombstones) blocks any second ingest of a batch id.
     */
   private def writeTombstone(spark: SparkSession, indexPath: String,
-                             segs: Seq[String], ids: DataFrame,
-                             n: Double, sumLen: Double): Unit =
-    SegmentStore.writeTombstone(spark, indexPath, segs, ids,
-      Seq("n" -> n, "sum_len" -> sumLen))
-
-  /** (id, _seg) applicability pairs of the committed tombstones: a
-    * row means "id is dead IN that segment". Bounded between
-    * compactions — always broadcast, never shuffled against postings.
-    */
-  private def tombstonePairs(spark: SparkSession,
-                             dels: Seq[String]): DataFrame =
-    SegmentStore.tombstonePairs(spark, dels)
+                             segs: Seq[Segment], ids: DataFrame,
+                             n: Double, sumLen: Double,
+                             nText: Double): Unit =
+    SegmentStore.writeTombstone(spark, indexPath, segs.map(_.path), ids,
+      Seq("n" -> n, "sum_len" -> sumLen, "n_text" -> nText))
 
   /** Per-segment `lens` rows tagged with their segment name, minus the
     * tombstones applicable to each segment: exactly the live corpus —
@@ -458,17 +448,9 @@ object InvertedIndex {
     * per frame and union the RESULTS; semi-joins distribute over the
     * left union, so that rewrite is always sound.
     */
-  private def liveLensFrames(spark: SparkSession, segs: Seq[String],
-                             dels: Seq[String]): Seq[DataFrame] =
-    SegmentStore.liveLedgerFrames(spark, segs, dels, "lens")
-
-  /** The union view of [[liveLensFrames]] — for consumers that rewrite
-    * the whole corpus anyway (compaction) and do not care about
-    * per-frame partitioning.
-    */
-  private def liveLens(spark: SparkSession, segs: Seq[String],
-                       dels: Seq[String]): DataFrame =
-    liveLensFrames(spark, segs, dels).reduce(_ unionByName _)
+  private def liveLensFrames(segs: Seq[Segment],
+                             dels: Seq[SegmentStore.Tombstone]): Seq[DataFrame] =
+    SegmentStore.liveLedgerFrames(segs.map(s => s.name -> s.lens), dels)
 
   /** ES-style upsert: documents whose ids are LIVE are tombstoned
     * first (scoped to the current segments), then the whole batch
@@ -479,41 +461,40 @@ object InvertedIndex {
     */
   def upsertDocs(docs: DataFrame, idCol: String, textCol: String,
                  indexPath: String): Unit = {
-    val spark = docs.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    tombstoneLiveOf(docs, idCol, indexPath, segs)
-    append(docs, idCol, textCol, indexPath)
+    val v = searcher(docs.sparkSession, indexPath)
+    tombstoneLiveOf(docs, idCol, indexPath, v.segs, v.dels)
+    writeSegment(docs, idCol, textCol, indexPath, v.segs.head.stats)
   }
 
   /** The upsert paths' single-scan probe-and-tombstone: ONE lens read
     * finds the live versions of the incoming ids AND their (n,
     * sum_len) moments, charged directly — not a second scan through
-    * deleteDocsScoped. No live match → no tombstone (pure inserts).
+    * deleteDocs. No live match → no tombstone (pure inserts).
     */
   private def tombstoneLiveOf(docs: DataFrame, idCol: String,
-                              indexPath: String,
-                              segs: Seq[String]): Unit = {
+                              indexPath: String, segs: Seq[Segment],
+                              dels: Seq[SegmentStore.Tombstone]): Unit = {
     val spark = docs.sparkSession
     SegmentStore.labeled(spark, "idx tomb: live probe") {
       // pinned: the ids subtree feeds one semi-join PER lens frame below
-      val ids = docs.select(col(idCol).as("id")).distinct()
-        .localCheckpoint(true)
-      // per-frame semi-join + union ≡ semi-join against the union, and
-      // keeps a compacted segment's id-bucketed lens pre-partitioned
-      // into its probe — the O(index) lens read of every upsert/CDC
-      // batch never reshuffles (spec-pinned)
-      val hits = liveLensFrames(spark, segs,
-          committedDeletes(spark, indexPath))
-        .map(_.join(ids, Seq("id"), "left_semi"))
-        .reduce(_ unionByName _)
-        .localCheckpoint(true)
-      val m = hits.agg(count(lit(1)).cast("double").as("n"),
-        coalesce(sum(col("len")), lit(0.0)).as("sum_len")).head()
-      if (m.getDouble(0) > 0)
-        writeTombstone(spark, indexPath, segs,
-          hits.select("id").distinct(), m.getDouble(0), m.getDouble(1))
+      SegmentStore.withLocalCheckpoint(
+          docs.select(col(idCol).as("id")).distinct()) { ids =>
+        // per-frame semi-join + union ≡ semi-join against the union,
+        // and keeps a compacted segment's id-bucketed lens
+        // pre-partitioned into its probe — the O(index) lens read of
+        // every upsert/CDC batch never reshuffles (spec-pinned)
+        SegmentStore.withLocalCheckpoint(liveLensFrames(segs, dels)
+            .map(_.join(ids, Seq("id"), "left_semi"))
+            .reduce(_ unionByName _)) { hits =>
+          val m = hits.agg(count(lit(1)).cast("double").as("n"),
+            coalesce(sum(col("len")), lit(0.0)).as("sum_len"),
+            count(col("len")).cast("double").as("n_text")).head()
+          if (m.getDouble(0) > 0)
+            writeTombstone(spark, indexPath, segs,
+              hits.select("id").distinct(), m.getDouble(0), m.getDouble(1),
+              m.getDouble(2))
+        }
+      }
     }
   }
 
@@ -543,13 +524,11 @@ object InvertedIndex {
     if (fs.exists(marker)) return
     if (!docs.isEmpty) {
       val ownName = s"seg-batch-$batchId"
-      val all = committedSegments(spark, indexPath)
-      val others = all.filterNot(s =>
-        new org.apache.hadoop.fs.Path(s).getName == ownName)
-      val (buckets, positions, analyzer) =
-        if (all.isEmpty) (bucketsIfNew, false, "standard")
-        else segMeta(spark, all)
-      if (others.nonEmpty) tombstoneLiveOf(docs, idCol, indexPath, others)
+      val v = view(spark, indexPath)
+      val others = v.segs.filterNot(_.name == ownName)
+      val (buckets, positions, analyzer) = layoutOf(v, bucketsIfNew)
+      if (others.nonEmpty)
+        tombstoneLiveOf(docs, idCol, indexPath, others, v.dels)
       writeSegmentNamed(docs, idCol, textCol, indexPath, ownName, buckets,
         positions, analyzer)
     }
@@ -612,15 +591,13 @@ object InvertedIndex {
       val nUpserts = r.getLong(3)
       if (r.getLong(0) > 0) {
         val ownName = s"seg-batch-$batchId"
-        val all = committedSegments(spark, indexPath)
-        val others = all.filterNot(s =>
-          new org.apache.hadoop.fs.Path(s).getName == ownName)
-        val (buckets, positions, analyzer) =
-          if (all.isEmpty) (bucketsIfNew, false, "standard")
-          else segMeta(spark, all)
+        val v = view(spark, indexPath)
+        val others = v.segs.filterNot(_.name == ownName)
+        val (buckets, positions, analyzer) = layoutOf(v, bucketsIfNew)
         // ONE tombstone covers both kinds of event: an upsert's stale
         // version and a delete's live version die the same way
-        if (others.nonEmpty) tombstoneLiveOf(evs, "id", indexPath, others)
+        if (others.nonEmpty)
+          tombstoneLiveOf(evs, "id", indexPath, others, v.dels)
         if (nUpserts > 0)
           writeSegmentNamed(evs.filter(col("_op") === "upsert")
               .select(col("id").as(idCol), col("_text").as(textCol)),
@@ -639,15 +616,18 @@ object InvertedIndex {
     * index so every segment shares one layout.
     */
   def append(docs: DataFrame, idCol: String, textCol: String,
-             indexPath: String): Unit = {
-    val spark = docs.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val (buckets, positions, analyzer) = segMeta(spark, segs)
-    writeSegment(docs, idCol, textCol, indexPath, buckets,
-      positions, analyzer)
-  }
+             indexPath: String): Unit =
+    writeSegment(docs, idCol, textCol, indexPath,
+      searcher(docs.sparkSession, indexPath).segs.head.stats)
+
+  /** (buckets, positions, analyzer) for the next segment of the index
+    * `v` shows — inherited from its first segment, or the new-index
+    * defaults when it has none yet.
+    */
+  private def layoutOf(v: View, bucketsIfNew: Int): (Int, Boolean, String) =
+    v.segs.headOption.map(_.stats)
+      .map(st => (st.buckets, st.positions, st.analyzer))
+      .getOrElse((bucketsIfNew, false, "standard"))
 
   /** Idempotent per-batch ingest for streaming drivers
     * ([[graft.streaming.CorpusStream.incrementalIndex]]): exactly-once
@@ -681,10 +661,8 @@ object InvertedIndex {
     val marker = SegmentStore.ingestMarker(indexPath, batchId)
     if (fs.exists(marker)) return
     if (!docs.isEmpty) {
-      val segs = committedSegments(spark, indexPath)
       val (buckets, positions, analyzer) =
-        if (segs.isEmpty) (bucketsIfNew, false, "standard")
-        else segMeta(spark, segs)
+        layoutOf(view(spark, indexPath), bucketsIfNew)
       writeSegmentNamed(docs, idCol, textCol, indexPath,
         s"seg-batch-$batchId", buckets, positions, analyzer)
     }
@@ -736,7 +714,7 @@ object InvertedIndex {
     * before its stats commit, a tombstone batch whose deleteDocs died
     * likewise): no reader consumes them, but left alone they
     * accumulate forever on a long-lived index and every
-    * committedSegments/committedDeletes listing stat-probes them.
+    * committed-dir listing stat-probes them.
     * Safe under compact()'s offline single-writer contract — nothing
     * is mid-write while this runs. (The registry compaction's sweep in
     * Dedup.compactDir is this same discipline.)
@@ -747,7 +725,7 @@ object InvertedIndex {
 
   /** `lensBuckets` sizes the compacted segment's id-bucketed lens
     * ledger — the build side of every later upsert/CDC/delete probe
-    * ([[tombstoneLiveOf]]/[[deleteDocsScoped]]): bucketed by id, the
+    * ([[tombstoneLiveOf]]/[[deleteDocs]]): bucketed by id, the
     * probe semi-join reads it pre-partitioned, so the per-micro-batch
     * O(index) lens read never reshuffles, at any index size. Pick it
     * for the target deployment's probe parallelism, like the dedup
@@ -759,87 +737,90 @@ object InvertedIndex {
               lensBuckets: Int = 0): Unit = {
     heal(spark, indexPath)
     sweepUncommitted(fsOf(spark, indexPath), indexPath)
-    val segs = committedSegments(spark, indexPath)
-    val dels = committedDeletes(spark, indexPath)
+    val v = view(spark, indexPath)
+    val (segs, dels) = (v.segs, v.dels)
     if (segs.length > 1 || (dels.nonEmpty && segs.nonEmpty)) {
       val fs = fsOf(spark, indexPath)
-      val (_, positions, analyzer) = segMeta(spark, segs)
-      val live = liveLens(spark, segs, dels)
-        .drop("_seg").localCheckpoint(true)
-      // ONE agg over the checkpointed live ledger serves the
-      // empty-index check below AND the merged stats moments — the
-      // previous limit(1).count + agg-at-write shape paid two extra
-      // jobs per compaction (r17-opt)
-      val m = live.agg(count(lit(1)).cast("double").as("n"),
-        coalesce(sum(col("len")), lit(0.0)).as("sum_len")).head()
-      // an index whose every doc is tombstoned would compact to a
-      // segment no reader can open (schema-less empty postings).
-      // Logical reads of that state stay correct, so SKIP the
-      // compaction instead of throwing: a CDC stream whose cadence
-      // compaction lands right after a delete-everything batch must
-      // not wedge on checkpoint replay — documents can still arrive
-      // in the next batch.
-      if (m.getDouble(0) == 0.0) {
-        System.err.println(s"[graft] compact skipped: every document " +
-          s"in $indexPath is tombstoned (build() afresh to reset, or " +
-          "ingest more documents)")
-        return
+      SegmentStore.withLocalCheckpoint(liveLensFrames(segs, dels)
+          .reduce(_ unionByName _).drop("_seg")) { live =>
+        // ONE agg over the checkpointed live ledger serves the
+        // empty-index check below AND the merged stats moments — the
+        // previous limit(1).count + agg-at-write shape paid two extra
+        // jobs per compaction (r17-opt)
+        val m = live.agg(count(lit(1)).cast("double").as("n"),
+          coalesce(sum(col("len")), lit(0.0)).as("sum_len"),
+          count(col("len")).cast("double").as("n_text")).head()
+        // an index whose every doc is tombstoned would compact to a
+        // segment no reader can open (schema-less empty postings).
+        // Logical reads of that state stay correct, so SKIP the
+        // compaction instead of throwing: a CDC stream whose cadence
+        // compaction lands right after a delete-everything batch must
+        // not wedge on checkpoint replay — documents can still arrive
+        // in the next batch.
+        if (m.getDouble(0) == 0.0)
+          System.err.println(s"[graft] compact skipped: every document " +
+            s"in $indexPath is tombstoned (build() afresh to reset, or " +
+            "ingest more documents)")
+        else {
+          val name = s"seg-${java.util.UUID.randomUUID()}"
+          val seg = s"$indexPath/segments/$name"
+          val inputs = segs.map(s => s"segments/${s.name}") ++
+            dels.map(d => s"deletes/${d.name}")
+          Manifest.write(fs, manifestPath(indexPath),
+            s"segments/$name" +: inputs)
+          // r18 (the r17 ADVICE ask): a compaction rewrites every posting
+          // anyway, so RECOMPUTE the term-bucket count from the live token
+          // volume with the autoBuckets formula and re-bucket the merged
+          // rows — before, an index whose first micro-batch was tiny kept
+          // its 8 term buckets forever, the "too few buckets at scale"
+          // half of the problem autoBuckets exists to fix. The new count
+          // lands in the merged stats doc, which is where every search
+          // and later append reads it; bucket ids never reach results.
+          val tb = autoBuckets(m.getDouble(1))
+          val mergedLive = v.livePostings(identity)
+            .withColumn("bucket", termBucket(col("term"), tb))
+          // postings and the lens ledger are independent reads (merged
+          // postings vs the checkpointed live lens) — overlap them
+          // (guide §2.6); stats stays last as the commit marker
+          // lens ledger bucket count from the LIVE corpus size when the
+          // caller passed 0 (auto) — one bucket per ~100k docs of 12 B
+          // rows, floor 8: the probe-parallelism knob should track the
+          // index, not a constant (guide §2)
+          val lb =
+            if (lensBuckets > 0) lensBuckets
+            else math.min(256, math.max(8, (m.getDouble(0) / 100000.0).ceil.toInt))
+          SegmentStore.inParallel(Seq(
+            () => mergedLive
+              // width = the recomputed bucket count (the r18 segment-write
+              // rule): no empty tasks below it, no session constant
+              .repartition(tb, col("bucket"))
+              .write.mode("overwrite").partitionBy("bucket")
+              .parquet(s"$seg/postings"),
+            () => Bucketing.saveBucketedBatch(
+              live.repartition(lb, col("id")),
+              s"$seg/lens", Seq("id"), lb)))
+          writeSegStats(spark, seg, m.getDouble(0), m.getDouble(1),
+            m.getDouble(2), tb, v.positions, v.stats.analyzer, mergedLive.schema)
+          (segs.map(_.path) ++ dels.map(_.path)).foreach(s =>
+            fs.delete(new org.apache.hadoop.fs.Path(s), true))
+          Manifest.delete(fs, manifestPath(indexPath))
+        }
       }
-      val name = s"seg-${java.util.UUID.randomUUID()}"
-      val seg = s"$indexPath/segments/$name"
-      val inputs =
-        segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-        dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
-      Manifest.write(fs, manifestPath(indexPath),
-        s"segments/$name" +: inputs)
-      // r18 (the r17 ADVICE ask): a compaction rewrites every posting
-      // anyway, so RECOMPUTE the term-bucket count from the live token
-      // volume with the autoBuckets formula and re-bucket the merged
-      // rows — before, an index whose first micro-batch was tiny kept
-      // its 8 term buckets forever, the "too few buckets at scale"
-      // half of the problem autoBuckets exists to fix. The new count
-      // lands in the merged stats doc, which is where every search
-      // and later append reads it; bucket ids never reach results.
-      val tb = autoBuckets(m.getDouble(1))
-      val mergedLive =
-        (if (dels.isEmpty) mergedPostings(spark, segs, identity)
-         else mergedLivePostings(spark, segs, dels, identity))
-          .withColumn("bucket", termBucket(col("term"), tb))
-      // postings and the lens ledger are independent reads (merged
-      // postings vs the checkpointed live lens) — overlap them
-      // (guide §2.6); stats stays last as the commit marker
-      // lens ledger bucket count from the LIVE corpus size when the
-      // caller passed 0 (auto) — one bucket per ~100k docs of 12 B
-      // rows, floor 8: the probe-parallelism knob should track the
-      // index, not a constant (guide §2)
-      val lb =
-        if (lensBuckets > 0) lensBuckets
-        else math.min(256, math.max(8, (m.getDouble(0) / 100000.0).ceil.toInt))
-      SegmentStore.inParallel(Seq(
-        () => mergedLive
-          // width = the recomputed bucket count (the r18 segment-write
-          // rule): no empty tasks below it, no session constant
-          .repartition(tb, col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$seg/postings"),
-        () => Bucketing.saveBucketedBatch(
-          live.repartition(lb, col("id")),
-          s"$seg/lens", Seq("id"), lb)))
-      writeSegStats(spark, seg, m.getDouble(0), m.getDouble(1),
-        tb, positions, analyzer)
-      (segs ++ dels).foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(s), true))
-      Manifest.delete(fs, manifestPath(indexPath))
     }
   }
 
-  /** Tombstone-adjusted corpus moments + the shared bucket count: ONE
-    * driver-side read of the (one-row-per-segment/tombstone) stats
-    * tables, feeding [[searchTopK]], [[termStats]], and [[stats]] so
-    * the accounting cannot desynchronize between them.
+  /** Tombstone-adjusted corpus moments + the shared bucket count and
+    * analyzer ([[View.stats]]), feeding every scored read, [[termStats]]
+    * and [[stats]] so the accounting cannot desynchronize between
+    * them. `n` is every live doc (the idf's N); `nText` the live docs
+    * with non-null text, over which lengths average.
     */
   private[operators] final case class LiveStats(n: Double, sumLen: Double,
-                                     buckets: Int, analyzer: String) {
+                                                nText: Double, buckets: Int,
+                                                analyzer: String) {
+    /** Mean live length, the [[Ranking.bm25TopK]] average. */
+    def avgLen: Double = if (nText > 0) sumLen / nText else 1.0
+
     /** Query-term analysis matching the chain the postings were built
       * with: lowercase always, plus the minimal stem under "english".
       * Idempotent (every stemmer output is a fixed point), so terms
@@ -850,48 +831,6 @@ object InvertedIndex {
         t.toLowerCase(java.util.Locale.ROOT))
   }
 
-  private[operators] def liveStats(spark: SparkSession, segs: Seq[String],
-                        dels: Seq[String]): LiveStats = {
-    val segStats = segs.map(readSegStats(spark, _))
-    val delStats = dels.map(readDelStats(spark, _))
-    // analyzer is uniform across segments (every writer inherits it)
-    LiveStats(
-      segStats.map(_.n).sum - delStats.map(_._1).sum,
-      segStats.map(_.sumLen).sum - delStats.map(_._2).sum,
-      segStats.head.buckets, segStats.head.analyzer)
-  }
-
-  /** [[liveStats]] for MANY indexes — since the stats sidecars are
-    * driver-side docs (r17-opt) this is a plain loop: zero Spark jobs
-    * for a wide [[FieldedIndex]] root's per-field corpus moments.
-    */
-  private[operators] def liveStatsBatch(
-      spark: SparkSession,
-      perIndex: Seq[(String, Seq[String], Seq[String])])
-      : Map[String, LiveStats] = {
-    require(perIndex.forall(_._2.nonEmpty),
-      "liveStatsBatch over an index with no committed segments")
-    perIndex.map { case (tag, segs, dels) =>
-      tag -> liveStats(spark, segs, dels)
-    }.toMap
-  }
-
-  /** The live postings of `terms` (already lowercased/distinct):
-    * bucket IN (...) prunes partition DIRECTORIES of every segment at
-    * planning time (spec-pinned), term IN (...) pushes to the parquet
-    * reader, and tombstoned docs are subtracted when tombstones exist.
-    */
-  private[operators] def prunedLivePostings(spark: SparkSession, segs: Seq[String],
-                                 dels: Seq[String], terms: Seq[String],
-                                 buckets: Int): DataFrame = {
-    val wanted = terms.map(bucketOf(_, buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term").isin(terms: _*))
-    if (dels.isEmpty) mergedPostings(spark, segs, prune)
-    else mergedLivePostings(spark, segs, dels, prune)
-  }
-
   /** Index observability — the ES indices-stats face: one row of live
     * corpus moments and structural counts. `n_docs`/`sum_len`/
     * `avg_len` are tombstone-adjusted (what scoring actually uses);
@@ -899,17 +838,14 @@ object InvertedIndex {
     * compaction cadence watches.
     */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     spark.range(1).select(
       lit(st.n.toLong).as("n_docs"),
       lit(st.sumLen).as("sum_len"),
-      lit(if (st.n > 0) st.sumLen / st.n else 0.0).as("avg_len"),
-      lit(segs.length).as("segments"),
-      lit(dels.length).as("tombstone_batches"),
+      lit(if (st.nText > 0) st.avgLen else 0.0).as("avg_len"),
+      lit(v.segs.length).as("segments"),
+      lit(v.dels.length).as("tombstone_batches"),
       lit(st.buckets).as("buckets"))
   }
 
@@ -921,13 +857,8 @@ object InvertedIndex {
   def termStats(spark: SparkSession, indexPath: String,
                 terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    prunedLivePostings(spark, segs, dels,
-        terms.map(st.analyzeTerm).distinct, st.buckets)
+    val v = searcher(spark, indexPath)
+    v.prunedLivePostings(terms.map(v.stats.analyzeTerm).distinct)
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
   }
 
@@ -941,22 +872,15 @@ object InvertedIndex {
                  idColName: String = "id",
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    // fail LOUDLY on a never-built / crashed-before-first-commit
-    // index: an empty result would read as "no matches"
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    // ONE driver-side read of the (one-row-per-segment) stats tables
-    // serves n, avg len, AND the bucket count — the serving path pays
-    // a single tiny job, and the corpus stats enter the score plan as
+    // the opened stats docs serve n, avg len AND the bucket count with
+    // no Spark job, and the corpus stats enter the score plan as
     // literals instead of a crossJoin. Committed tombstone batches
     // subtract their (pre-charged, lens-exact) moments the same way,
     // and tombstoned docs drop out of the postings BEFORE df counts
     // rows — idf, tf, and the corpus stats all see only live docs.
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val terms = queryTerms.map(st.analyzeTerm).distinct
-    rawTermScores(spark, segs, dels, st, terms, idColName, k1, b)
+    val v = searcher(spark, indexPath)
+    val terms = queryTerms.map(v.stats.analyzeTerm).distinct
+    rawTermScores(v, terms, idColName, k1, b)
       .orderBy(col("score").desc, col(idColName))
       .limit(k)
   }
@@ -965,11 +889,9 @@ object InvertedIndex {
     * [[searchAfter]] — one pruned postings read, broadcast df,
     * per-doc Okapi sum with the single 6-dp rounding.
     */
-  private def rawTermScores(spark: SparkSession, segs: Seq[String],
-                            dels: Seq[String], st: LiveStats,
-                            terms: Seq[String], idColName: String,
+  private def rawTermScores(v: View, terms: Seq[String], idColName: String,
                             k1: Double, b: Double): DataFrame =
-    rawTermContribs(spark, segs, dels, st, terms, k1, b)
+    rawTermContribs(v, terms, k1, b)
       .groupBy(col("id").as(idColName))
       .agg(round(sum(col("_s")), 6).as("score"))
 
@@ -979,16 +901,12 @@ object InvertedIndex {
     * [[FieldedIndex.queryStringSearchTopK]] keeps the term grain to
     * gate and score boolean clauses per field.
     */
-  private[operators] def rawTermContribs(spark: SparkSession,
-                                         segs: Seq[String],
-                                         dels: Seq[String],
-                                         st: LiveStats,
-                                         terms: Seq[String],
+  private[operators] def rawTermContribs(v: View, terms: Seq[String],
                                          k1: Double,
                                          b: Double): DataFrame = {
-    val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val p = prunedLivePostings(spark, segs, dels, terms, st.buckets)
+    val n = v.stats.n
+    val avg = v.stats.avgLen
+    val p = v.prunedLivePostings(terms)
     // postings rows are unique per (term, id) across segments (the
     // append contract): df = row count per term
     val dfreq = p.groupBy("term")
@@ -1026,11 +944,8 @@ object InvertedIndex {
                          k1: Double = 1.2,
                          b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     val syn = graft.functions.Synonyms.parse(synonymRules)
       .map { case (f, ts) =>
         st.analyzeTerm(f) -> ts.map(st.analyzeTerm).distinct.sorted
@@ -1039,8 +954,8 @@ object InvertedIndex {
       .map(t => syn.getOrElse(t, Seq(t))).distinct
     val allTerms = groups.flatten.distinct
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val p = prunedLivePostings(spark, segs, dels, allTerms, st.buckets)
+    val avg = st.avgLen
+    val p = v.prunedLivePostings(allTerms)
     val dfMap = p.groupBy("term")
       .agg(count(lit(1)).cast("double").as("_df"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -1087,13 +1002,9 @@ object InvertedIndex {
                   idColName: String = "id",
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty && k > 0)
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val terms = queryTerms.map(st.analyzeTerm).distinct
-    rawTermScores(spark, segs, dels, st, terms, idColName, k1, b)
+    val v = searcher(spark, indexPath)
+    val terms = queryTerms.map(v.stats.analyzeTerm).distinct
+    rawTermScores(v, terms, idColName, k1, b)
       .filter(col("score") < afterScore ||
         (col("score") === afterScore && col(idColName) > lit(afterId)))
       .orderBy(col("score").desc, col(idColName))
@@ -1133,13 +1044,10 @@ object InvertedIndex {
     require(must.nonEmpty || should.nonEmpty,
       "pure-negative bool (only must_not) is a corpus scan, not an " +
         "index lookup — refuse rather than silently scanning")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     val mustT = must.map(st.analyzeTerm).distinct
     val shouldT = should.map(st.analyzeTerm).distinct
       .filterNot(mustT.contains)
@@ -1155,7 +1063,7 @@ object InvertedIndex {
       s"minimum_should_match $msm exceeds ${shouldT.size} should terms")
     val scoredT = mustT ++ shouldT
     val allT = scoredT ++ notT
-    val p = prunedLivePostings(spark, segs, dels, allT, st.buckets)
+    val p = v.prunedLivePostings(allT)
     val dfreq = p.filter(col("term").isin(scoredT: _*))
       .groupBy("term").agg(count(lit(1)).cast("double").as("_df"))
     val contrib =
@@ -1241,13 +1149,10 @@ object InvertedIndex {
       minShouldMatchPct <= 100,
       "moreLikeThisTopK: k/maxQueryTerms >= 1, minTermFreq/minDocFreq " +
         ">= 1, minShouldMatchPct in [0, 100]")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     // 1. like-text term frequencies through the index's analysis chain
     // (tokensOf = the driver twin of TextAnalysis.tokens, so like-text
     // tf can never desynchronize from index postings)
@@ -1256,22 +1161,11 @@ object InvertedIndex {
         .analyzeTerm(st.analyzer, t))
       .groupBy(identity).view.mapValues(_.length).toMap
       .filter(_._2 >= minTermFreq)
-    val empty = {
-      // typed empty result: id type from the postings schema (footer
-      // read only; the lens dir may be bucketed on compacted segments)
-      val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          idT.copy(name = idColName),
-          org.apache.spark.sql.types.StructField("score",
-            org.apache.spark.sql.types.DoubleType))))
-    }
+    val empty = emptyHits(spark, v, idColName)
     if (likeTf.isEmpty) return empty
     // 2. live df of the candidates — one bucket-pruned read, bounded
     // collect (≤ |like terms| rows)
-    val dfMap = prunedLivePostings(spark, segs, dels,
-        likeTf.keys.toSeq, st.buckets)
+    val dfMap = v.prunedLivePostings(likeTf.keys.toSeq)
       .groupBy("term").agg(count(lit(1)).cast("double").as("_df"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // 3. selection: like-tf · idf, 6-dp rounded, term-asc ties
@@ -1289,7 +1183,7 @@ object InvertedIndex {
     // 4./5. BM25 over the selected terms (searchTopK's formula and
     // rounding) + the distinct-matched-terms cut; the exclusion
     // filters RESULT rows after df is counted, so df matches ES's
-    val p = prunedLivePostings(spark, segs, dels, selected, st.buckets)
+    val p = v.prunedLivePostings(selected)
     val dfreq = p.groupBy("term")
       .agg(count(lit(1)).cast("double").as("_df"))
     val scoredRows = p.join(broadcast(dfreq), Seq("term"))
@@ -1343,27 +1237,20 @@ object InvertedIndex {
     require(indexPaths.distinct.size == indexPaths.size,
       s"duplicate index paths: ${indexPaths.mkString(", ")}")
     require(queryTerms.nonEmpty && k > 0)
-    val parts = indexPaths.map { p =>
-      val segs = committedSegments(spark, p)
-      require(segs.nonEmpty,
-        s"$p has no committed segments — build() first")
-      val dels = committedDeletes(spark, p)
-      (p, segs, dels, liveStats(spark, segs, dels))
-    }
-    val analyzers = parts.map(_._4.analyzer).distinct
+    val parts = indexPaths.map(searcher(spark, _))
+    val analyzers = parts.map(_.stats.analyzer).distinct
     require(analyzers.size == 1,
       s"indexes mix analyzers $analyzers — cross-index search needs " +
         "one analysis chain (rebuild with a shared analyzer)")
-    val st0 = parts.head._4
-    val n = parts.map(_._4.n).sum
-    val sumLen = parts.map(_._4.sumLen).sum
-    val avg = if (n > 0) sumLen / n else 1.0
+    val st0 = parts.head.stats
+    val n = parts.map(_.stats.n).sum
+    val nText = parts.map(_.stats.nText).sum
+    val sumLen = parts.map(_.stats.sumLen).sum
+    val avg = if (nText > 0) sumLen / nText else 1.0
     val terms = queryTerms.map(st0.analyzeTerm).distinct
     // each index prunes with its own bucket count; rows are disjoint
     // across indexes (the id contract), so df = row count per term
-    val p = parts.map { case (_, segs, dels, st) =>
-      prunedLivePostings(spark, segs, dels, terms, st.buckets)
-    }.reduce(_ unionByName _)
+    val p = parts.map(_.prunedLivePostings(terms)).reduce(_ unionByName _)
     val dfreq = p.groupBy("term")
       .agg(count(lit(1)).cast("double").as("_df"))
     p.join(broadcast(dfreq), Seq("term"))
@@ -1421,13 +1308,10 @@ object InvertedIndex {
       s"qIdCol '$qIdCol' collides with the postings/result columns — " +
         "rename the query-id column")
     val spark = queries.sparkSession
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     // (q_id, term) pairs, analyzed with the index's chain (lowercase,
     // plus the stem under "english" — Column spelling of
     // LiveStats.analyzeTerm), de-duped within each query so a repeated
@@ -1445,16 +1329,13 @@ object InvertedIndex {
       if (nTerms <= maxPushdownTerms) {
         val terms = qt.select("term").distinct()
           .collect().map(_.getString(0)).toSeq
-        prunedLivePostings(spark, segs, dels, terms, st.buckets)
+        v.prunedLivePostings(terms)
       } else {
         val wanted = qt.select(termBucket(col("term"), st.buckets)
             .as("bucket")).distinct().collect().map(_.getInt(0)).toSeq
         val termSet = qt.select("term").distinct()
-        val prune: DataFrame => DataFrame =
-          _.filter(col("bucket").isin(wanted: _*))
-            .join(termSet, Seq("term"), "left_semi")
-        if (dels.isEmpty) mergedPostings(spark, segs, prune)
-        else mergedLivePostings(spark, segs, dels, prune)
+        v.livePostings(_.filter(col("bucket").isin(wanted: _*))
+          .join(termSet, Seq("term"), "left_semi"))
       }
     val dfreq = p.groupBy("term")
       .agg(count(lit(1)).cast("double").as("_df"))
@@ -1493,14 +1374,11 @@ object InvertedIndex {
                    phrase: Seq[String],
                    idColName: String = "id"): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
+    val v = searcher(spark, indexPath)
+    require(v.positions,
       s"$indexPath was built without positional postings — " +
         "build(positions = true) enables phraseSearch")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = v.stats
     // analyzeTerm's Locale.ROOT lowercase matches Spark's
     // locale-independent lower() that lowercased the index tokens (a
     // Turkish-locale JVM would otherwise map 'I' → 'ı' and silently
@@ -1508,7 +1386,7 @@ object InvertedIndex {
     // indexed positions did
     val terms = phrase.map(st.analyzeTerm)
     val frames = terms.zipWithIndex.map { case (t, i) =>
-      prunedLivePostings(spark, segs, dels, Seq(t), st.buckets)
+      v.prunedLivePostings(Seq(t))
         .select(col("id"), col("pos").as(s"_pos$i"))
     }
     val joined = frames.reduce((a, b) => a.join(b, Seq("id")))
@@ -1527,8 +1405,8 @@ object InvertedIndex {
     * of the constituent terms' idfs (Lucene's multi-term idfExplain),
     * saturated by the standard Okapi tf/length factor. Same read
     * shape as [[phraseSearch]] plus one tiny per-term df aggregation;
-    * corpus stats enter as driver literals from the one-row stats
-    * tables (the [[searchTopK]] discipline). Output (idColName,
+    * corpus stats enter as driver literals from the stats docs (the
+    * [[searchTopK]] discipline). Output (idColName,
     * score) for the top `k` phrase-matching docs, 6-dp rounding, id
     * ties — ES's `match_phrase` ranking, engine-replayably.
     *
@@ -1555,7 +1433,7 @@ object InvertedIndex {
                        b: Double = 0.75, slop: Int = 0): DataFrame = {
     require(k > 0, "k must be positive")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    rawPhraseScores(spark, indexPath, phrase, k1, b, slop = slop)
+    rawPhraseScores(searcher(spark, indexPath), phrase, k1, b, slop)
       .select(col("id").as(idColName), round(col("_fs"), 6).as("score"))
       .orderBy(col("score").desc, col(idColName))
       .limit(k)
@@ -1591,35 +1469,19 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     val qs = graft.functions.TextAnalysis.tokensOf(query)
     require(qs.nonEmpty, "query analyzes to no terms")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
+    val v = searcher(spark, indexPath)
+    require(v.positions,
       s"$indexPath was built without positional postings — " +
         "build(positions = true) enables phrase-prefix search")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     val full = qs.init.map(st.analyzeTerm)
-    val (p0, exts, _) = vocabPrefixCandidates(spark, indexPath,
-      st.analyzeTerm(qs.last), maxCandidates, Some(segs))
-    val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
-    def emptyResult = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        idT.copy(name = idColName),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    if (exts.isEmpty) return emptyResult
-    val wanted = exts.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p0 && col("term") < p0 + '￿')
-        .filter(col("term").startsWith(p0))
-    val cand =
-      if (dels.isEmpty) mergedPostings(spark, segs, prune)
-      else mergedLivePostings(spark, segs, dels, prune)
+    val (p0, exts) = vocabPrefixCandidates(spark, v,
+      st.analyzeTerm(qs.last), maxCandidates)
+    if (exts.isEmpty)
+      return emptyHits(spark, v, idColName, scoreNullable = false)
+    val cand = v.livePostings(prefixRange(p0, exts, st.buckets))
     // all prefix-token positions per doc (several candidate terms can
     // hit one doc); bounded by doc length
     val pp = cand.select(col("id"), explode(col("pos")).as("_pp"))
@@ -1628,8 +1490,7 @@ object InvertedIndex {
       // bare prefix box: constant score, id order (ES's behavior)
       return pp.select(col("id").as(idColName), lit(1.0).as("score"))
         .orderBy(col(idColName)).limit(k)
-    val all = prunedLivePostings(spark, segs, dels, full.distinct,
-      st.buckets)
+    val all = v.prunedLivePostings(full.distinct)
     val dfreq = all.groupBy("term")
       .agg(count(lit(1)).cast("double").as("_df"))
     val frames = full.zipWithIndex.map { case (t, i) =>
@@ -1669,30 +1530,19 @@ object InvertedIndex {
     * under `multi_match type: phrase` (rounding belongs to the FINAL
     * combined score there, the [[FieldedIndex]] discipline).
     */
-  private[operators] def rawPhraseScores(spark: SparkSession,
-                                         indexPath: String,
-                                         phrase: Seq[String],
-                                         k1: Double,
-                                         b: Double,
-                                         pre: Option[(Seq[String],
-                                           Seq[String], LiveStats)] = None,
-                                         slop: Int = 0)
-      : DataFrame = {
+  private[operators] def rawPhraseScores(v: View, phrase: Seq[String],
+                                         k1: Double, b: Double,
+                                         slop: Int = 0): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    val segs = pre.map(_._1).getOrElse(committedSegments(spark, indexPath))
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    require(indexPositions(spark, segs),
-      s"$indexPath was built without positional postings — " +
+    require(v.positions,
+      s"${v.path} was built without positional postings — " +
         "build(positions = true) enables phrase scoring")
-    val dels = pre.map(_._2).getOrElse(committedDeletes(spark, indexPath))
-    val st = pre.map(_._3).getOrElse(liveStats(spark, segs, dels))
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     val terms = phrase.map(st.analyzeTerm)
-    val all = prunedLivePostings(spark, segs, dels, terms.distinct,
-      st.buckets)
+    val all = v.prunedLivePostings(terms.distinct)
     // per-term document frequencies: postings rows are unique per
     // (term, id) across segments, so df = row count per term —
     // ≤ |phrase| rows, broadcast
@@ -1795,11 +1645,9 @@ object InvertedIndex {
     * window, where a stale dictionary would pass a fresh check).
     */
   def buildFuzzyDictionary(spark: SparkSession, indexPath: String): Unit = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val terms = mergedPostings(spark, segs, identity)
-      .select("term").distinct()
+    val v = searcher(spark, indexPath)
+    val terms = v.segs.map(_.postings.select("term"))
+      .reduce(_ unionByName _).distinct()
     // deletion neighborhood as pure Column ops over code points:
     // variant i = the term minus code point i, plus the term itself
     val cps = array_remove(split(col("term"), ""), "")
@@ -1811,14 +1659,48 @@ object InvertedIndex {
       ).as("variant"))
       .distinct()
       .write.mode("overwrite").parquet(s"$indexPath/fuzzy")
-    import spark.implicits._
-    segNames(segs).toDF("segment")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/fuzzy_segments")
+    writeFingerprint(spark, v, "fuzzy")
   }
 
-  private def segNames(segs: Seq[String]): Seq[String] =
-    segs.map(s => new org.apache.hadoop.fs.Path(s).getName).sorted
+  /** Sidecar `<sidecar>_segments`: the names of the segments a sidecar
+    * was built from, a driver-side JSON doc written after the sidecar
+    * (see [[requireFresh]]).
+    */
+  private def writeFingerprint(spark: SparkSession, v: View,
+                               sidecar: String): Unit =
+    SegmentStore.writeDocDir(fsOf(spark, v.path),
+      s"${v.path}/${sidecar}_segments", org.json4s.JObject(
+        "segments" -> org.json4s.JArray(
+          v.segs.map(s => org.json4s.JString(s.name)).toList)))
+
+  /** The staleness gate of the vocabulary-derived sidecars: `sidecar`
+    * must be committed and built from EXACTLY the segment set `v`
+    * serves — an append since the build would silently miss its new
+    * vocabulary. Checked against the caller's listing, so one listing
+    * serves the whole query.
+    */
+  private def requireFresh(spark: SparkSession, v: View, sidecar: String,
+                           what: String, rebuild: String): Unit = {
+    val fs = fsOf(spark, v.path)
+    require(fs.exists(
+      new org.apache.hadoop.fs.Path(s"${v.path}/$sidecar/_SUCCESS")),
+      s"${v.path} has no committed $what — $rebuild() first")
+    val recorded = (if (fs.exists(new org.apache.hadoop.fs.Path(
+          s"${v.path}/${sidecar}_segments/_SUCCESS")))
+        SegmentStore.readDocDir(fs, s"${v.path}/${sidecar}_segments")
+      else None)
+      .map(_ \ "segments").collect { case org.json4s.JArray(xs) =>
+        xs.collect { case org.json4s.JString(n) => n }
+      }.getOrElse(throw new IllegalArgumentException(
+        s"${v.path}/$sidecar has no segment fingerprint (built by an " +
+          s"older version, or the build crashed) — $rebuild() again"))
+    val serving = v.segs.map(_.name)
+    require(recorded.sorted == serving.sorted,
+      s"${v.path}/$sidecar is STALE: it was built from segments " +
+        s"${recorded.sorted} but the index now has ${serving.sorted} — " +
+        s"appended/compacted vocabulary would silently miss from " +
+        s"$what lookups; $rebuild() again")
+  }
 
   /** The driver-side spelling of the same neighborhood (query side). */
   private def deletionVariants(term: String): Seq[String] = {
@@ -1862,41 +1744,22 @@ object InvertedIndex {
     */
   private def fuzzyResolve(spark: SparkSession, indexPath: String,
                            queryTerms: Seq[String], maxCandidates: Int)
-  : (LiveStats, Seq[String], Map[String, Seq[String]]) = {
-    val fs = fsOf(spark, indexPath)
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/fuzzy/_SUCCESS")),
-      s"$indexPath has no committed fuzzy dictionary — " +
-        "buildFuzzyDictionary() first")
-    // staleness gate: the dictionary must have been built from
-    // EXACTLY the committed segment set serving this query — an
-    // append since the build would silently miss its new vocabulary
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/fuzzy_segments/_SUCCESS")),
-      s"$indexPath/fuzzy has no segment fingerprint (built by an " +
-        "older version, or the build crashed) — buildFuzzyDictionary() " +
-        "again")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val recorded = spark.read.parquet(s"$indexPath/fuzzy_segments")
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(recorded == segNames(segs),
-      s"$indexPath/fuzzy is STALE: it was built from segments " +
-        s"$recorded but the index now has ${segNames(segs)} — " +
-        "appended/compacted vocabulary would silently miss from fuzzy " +
-        "resolution; buildFuzzyDictionary() again")
+  : (View, Seq[String], Map[String, Seq[String]]) = {
+    val v = searcher(spark, indexPath)
+    requireFresh(spark, v, "fuzzy", "fuzzy dictionary",
+      "buildFuzzyDictionary")
     // query terms run the index's analysis chain FIRST (the ES order:
     // fuzziness applies to analyzed terms) — the vocabulary the
     // dictionary was derived from is already analyzed
-    val st = liveStats(spark, segs, committedDeletes(spark, indexPath))
+    val st = v.stats
     val lowered = queryTerms.map(st.analyzeTerm).distinct
     val qVariants = lowered.flatMap(t =>
       deletionVariants(t).map(_ -> t)).groupBy(_._1)
       .view.mapValues(_.map(_._2)).toMap
     // pruned dictionary read: IN over the query's variant strings —
     // a driver-sized list, so the filter pushes into the scan
-    val cand = spark.read.parquet(s"$indexPath/fuzzy")
+    val cand = spark.read.schema("term STRING, variant STRING")
+      .parquet(s"$indexPath/fuzzy")
       .filter(col("variant").isInCollection(qVariants.keys.toSeq))
       .select("variant", "term").distinct()
       .limit(maxCandidates + 1)
@@ -1926,7 +1789,7 @@ object InvertedIndex {
       val v = r.getString(0); val t = r.getString(1)
       qVariants.getOrElse(v, Nil).filter(q => lev(q, t) <= 1).map(_ -> t)
     }.toSeq.distinct
-    (st, lowered,
+    (v, lowered,
       pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
   }
 
@@ -1955,7 +1818,7 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     require(Seq("missing", "popular", "always").contains(mode),
       s"unknown suggest mode '$mode' (missing, popular, always)")
-    val (st, lowered, byQuery) =
+    val (v, lowered, byQuery) =
       fuzzyResolve(spark, indexPath, Seq(term), maxCandidates)
     val analyzed = lowered.head
     val neighbors = byQuery.getOrElse(analyzed, Nil)
@@ -1964,9 +1827,7 @@ object InvertedIndex {
       .toDF("term", "df", "distance")
     if (neighbors.isEmpty) return empty
     // one bucket-pruned live-df read over the bounded candidate set
-    val segs = committedSegments(spark, indexPath)
-    val dels = committedDeletes(spark, indexPath)
-    val dfs = prunedLivePostings(spark, segs, dels, neighbors, st.buckets)
+    val dfs = v.prunedLivePostings(neighbors)
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val selfDf = dfs.getOrElse(analyzed, 0L)
@@ -1998,18 +1859,13 @@ object InvertedIndex {
     * refuse a mismatched segment set loudly.
     */
   def buildVocabulary(spark: SparkSession, indexPath: String): Unit = {
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    mergedPostings(spark, segs, identity)
-      .select("term").distinct()
+    val v = searcher(spark, indexPath)
+    v.segs.map(_.postings.select("term")).reduce(_ unionByName _)
+      .distinct()
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$indexPath/vocab")
-    import spark.implicits._
-    segNames(segs).toDF("segment")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/vocab_segments")
+    writeFingerprint(spark, v, "vocab")
   }
 
   /** ES's completion suggester from the live index: the top-`k`
@@ -2027,89 +1883,72 @@ object InvertedIndex {
     * Terms whose postings are fully tombstoned have no live df and
     * drop out, so suggestions never resurrect deleted-only terms.
     */
-  /** The sidecar-read half shared by [[suggestCompletions]] and
-    * [[boolPrefixSearchTopK]]: existence + fingerprint staleness
-    * checks, the pushable range read, the loud candidate cap.
-    * Returns (lowercased prefix, candidate terms, committed segments).
+  /** The sidecar-read half shared by [[suggestCompletions]],
+    * [[termsEnum]] and the prefix searches: the staleness gate against
+    * the caller's view (one listing serves the whole query — a commit
+    * landing between two listings would otherwise make stats
+    * inconsistent with the candidate set), the pushable range read, the
+    * loud candidate cap. Returns (lowercased prefix, candidate terms).
     */
-  /** `preListedSegs`: callers that already listed the committed
-    * segments (to compute corpus stats) pass that snapshot so ONE
-    * listing serves the whole query — a commit landing between two
-    * independent listings would otherwise make stats inconsistent
-    * with the candidate set. The vocabulary fingerprint is checked
-    * against whichever snapshot is used.
-    */
-  private def vocabPrefixCandidates(spark: SparkSession,
-                                    indexPath: String, prefix: String,
-                                    maxCandidates: Int,
-                                    preListedSegs: Option[Seq[String]] = None)
-      : (String, Seq[String], Seq[String]) = {
+  private def vocabPrefixCandidates(spark: SparkSession, v: View,
+                                    prefix: String, maxCandidates: Int)
+      : (String, Seq[String]) = {
     val p = prefix.toLowerCase(java.util.Locale.ROOT)
     require(p.nonEmpty,
       "empty prefix would enumerate the whole vocabulary — give at " +
         "least one character")
-    val fs = fsOf(spark, indexPath)
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/vocab/_SUCCESS")),
-      s"$indexPath has no committed vocabulary sidecar — " +
-        "buildVocabulary() first")
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexPath/vocab_segments/_SUCCESS")),
-      s"$indexPath/vocab has no segment fingerprint (built by an " +
-        "older version, or the build crashed) — buildVocabulary() again")
-    val segs = preListedSegs.getOrElse {
-      val listed = committedSegments(spark, indexPath)
-      require(listed.nonEmpty,
-        s"$indexPath has no committed segments — build() first")
-      listed
-    }
-    val recorded = spark.read.parquet(s"$indexPath/vocab_segments")
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(recorded == segNames(segs),
-      s"$indexPath/vocab is STALE: it was built from segments " +
-        s"$recorded but the index now has ${segNames(segs)} — " +
-        "appended/compacted vocabulary would silently miss from " +
-        "prefix resolution; buildVocabulary() again")
+    requireFresh(spark, v, "vocab", "vocabulary sidecar", "buildVocabulary")
     // range bound for row-group pruning + the exact prefix test
     // (startsWith alone doesn't push as a range); any real char's
     // first UTF-16 unit sorts below the U+FFFF noncharacter, so the
     // upper bound never excludes a true extension of the prefix
-    val cand = spark.read.parquet(s"$indexPath/vocab")
-      .filter(col("term") >= p && col("term") < p + '￿')
+    val cand = spark.read.schema("term STRING").parquet(s"${v.path}/vocab")
+      .filter(col("term") >= p && col("term") < p + '\uffff')
       .filter(col("term").startsWith(p))
       .limit(maxCandidates + 1)
       .collect().map(_.getString(0)).toSeq
     require(cand.length <= maxCandidates,
       s"prefix '$prefix' matched more than $maxCandidates vocabulary " +
         "terms — lengthen the prefix or raise the cap deliberately")
-    (p, cand, segs)
+    (p, cand)
   }
+
+  /** The postings read of prefix `p`'s candidate terms: the
+    * candidates' bucket directories plus the pushable term RANGE
+    * (the vocabulary is fingerprint-matched to the live segments, so
+    * the candidates ARE every postings term extending the prefix) —
+    * never a candidate IN list, which at the 10k cap would be a
+    * 10k-literal predicate bloating the plan.
+    */
+  private def prefixRange(p: String, cand: Seq[String],
+                          buckets: Int): DataFrame => DataFrame = {
+    val wanted = cand.map(bucketOf(_, buckets)).distinct
+    _.filter(col("bucket").isin(wanted: _*))
+      .filter(col("term") >= p && col("term") < p + '\uffff')
+      .filter(col("term").startsWith(p))
+  }
+
+  /** A typed empty (idColName, score) result: the id type from the
+    * postings schema the commit doc recorded.
+    */
+  private def emptyHits(spark: SparkSession, v: View, idColName: String,
+                        scoreNullable: Boolean = true): DataFrame =
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType(Seq(
+        v.idField.copy(name = idColName),
+        org.apache.spark.sql.types.StructField("score",
+          org.apache.spark.sql.types.DoubleType, scoreNullable))))
 
   def suggestCompletions(spark: SparkSession, indexPath: String,
                          prefix: String, k: Int = 5,
                          maxCandidates: Int = 10000): DataFrame = {
     require(k > 0, "k must be positive")
-    val (p, cand, segs) =
-      vocabPrefixCandidates(spark, indexPath, prefix, maxCandidates)
+    val v = searcher(spark, indexPath)
+    val (p, cand) = vocabPrefixCandidates(spark, v, prefix, maxCandidates)
     import spark.implicits._
     if (cand.isEmpty) return Seq.empty[(String, Long)].toDF("term", "df")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    // the vocabulary is fingerprint-matched to the live segments, so
-    // the candidate set IS exactly "every postings term extending the
-    // prefix" — the postings read reuses the same pushable RANGE
-    // predicate instead of a candidate IN list (which at the 10k cap
-    // would be a 10k-literal predicate bloating the plan); only the
-    // bucket directory list (distinct md5 buckets of the candidates,
-    // bounded by the index's bucket count) comes from the collected
-    // candidates
-    val wanted = cand.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-    (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-     else mergedLivePostings(spark, segs, dels, prune))
+    v.livePostings(prefixRange(p, cand, v.stats.buckets))
       .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
       .orderBy(col("df").desc, col("term"))
       .limit(k)
@@ -2130,23 +1969,15 @@ object InvertedIndex {
                 size: Int = 10,
                 searchAfter: Option[String] = None): DataFrame = {
     require(size > 0, "size must be positive")
-    val (p, cand0, segs) =
-      vocabPrefixCandidates(spark, indexPath, prefix, 10000)
+    val v = searcher(spark, indexPath)
+    val (p, cand0) = vocabPrefixCandidates(spark, v, prefix, 10000)
     import spark.implicits._
     val after = searchAfter.map(_.toLowerCase(java.util.Locale.ROOT))
     val cand = after.fold(cand0)(a => cand0.filter(_ > a))
     if (cand.isEmpty) return Seq.empty[String].toDF("term")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
-    val wanted = cand.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame = df0 => {
-      val ranged = df0.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-      after.fold(ranged)(a => ranged.filter(col("term") > a))
-    }
-    (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-     else mergedLivePostings(spark, segs, dels, prune))
+    val ranged = prefixRange(p, cand, v.stats.buckets)
+    v.livePostings(df0 =>
+        after.fold(ranged(df0))(a => ranged(df0).filter(col("term") > a)))
       .select("term").distinct()
       .orderBy(col("term"))
       .limit(size)
@@ -2253,15 +2084,12 @@ object InvertedIndex {
                    onlyIds: Option[Seq[Any]] = None,
                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "explain needs at least one term")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
+    val avg = st.avgLen
     val terms = queryTerms.map(st.analyzeTerm).distinct
-    val posts0 = prunedLivePostings(spark, segs, dels, terms, st.buckets)
+    val posts0 = v.prunedLivePostings(terms)
     val posts = onlyIds.fold(posts0)(ids =>
       posts0.filter(col("id").isin(ids: _*)))
     // df comes from the FULL live postings (restricting to onlyIds
@@ -2294,15 +2122,11 @@ object InvertedIndex {
                     query: String, operator: String = "or"): Long = {
     require(operator == "or" || operator == "and",
       s"operator must be or | and, got '$operator'")
-    val segs = committedSegments(spark, indexPath)
-    require(segs.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs, dels)
+    val v = searcher(spark, indexPath)
     val terms = graft.functions.TextAnalysis.tokensOf(query)
-      .map(st.analyzeTerm).distinct
+      .map(v.stats.analyzeTerm).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val posts = prunedLivePostings(spark, segs, dels, terms, st.buckets)
+    val posts = v.prunedLivePostings(terms)
     val ids =
       if (operator == "or") posts.select("id").distinct()
       else posts.groupBy("id")
@@ -2347,39 +2171,22 @@ object InvertedIndex {
     require(k > 0, "k must be positive")
     val qs = graft.functions.TextAnalysis.tokensOf(query)
     require(qs.nonEmpty, "query analyzes to no terms")
-    val segs0 = committedSegments(spark, indexPath)
-    require(segs0.nonEmpty,
-      s"$indexPath has no committed segments — build() first")
-    val dels = committedDeletes(spark, indexPath)
-    val st = liveStats(spark, segs0, dels)
+    val v = searcher(spark, indexPath)
+    val st = v.stats
     // the scan face analyzes the LAST term through the full chain
     // too (the prefix is stemmed under "english") — mirror it
     val fullTerms = qs.init.map(st.analyzeTerm).distinct
-    val (p, exts, segs) = vocabPrefixCandidates(spark, indexPath,
-      st.analyzeTerm(qs.last), maxCandidates, Some(segs0))
-    val idT = spark.read.parquet(s"${segs.head}/postings").schema("id")
-    def emptyResult = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        idT.copy(name = idColName),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType))))
-    if (exts.isEmpty) return emptyResult
+    val (p, exts) = vocabPrefixCandidates(spark, v,
+      st.analyzeTerm(qs.last), maxCandidates)
+    if (exts.isEmpty) return emptyHits(spark, v, idColName)
     val n = st.n
-    val avg = if (n > 0) st.sumLen / n else 1.0
-    val wanted = exts.map(bucketOf(_, st.buckets)).distinct
-    val prune: DataFrame => DataFrame =
-      _.filter(col("bucket").isin(wanted: _*))
-        .filter(col("term") >= p && col("term") < p + '￿')
-        .filter(col("term").startsWith(p))
-    val preIds = (if (dels.isEmpty) mergedPostings(spark, segs, prune)
-      else mergedLivePostings(spark, segs, dels, prune))
+    val avg = st.avgLen
+    val preIds = v.livePostings(prefixRange(p, exts, st.buckets))
       .select("id").distinct()
     val scored =
       if (fullTerms.isEmpty) preIds.select(col("id"), lit(1.0).as("_sc"))
       else {
-        val posts = prunedLivePostings(spark, segs, dels, fullTerms,
-          st.buckets)
+        val posts = v.prunedLivePostings(fullTerms)
         val dfreq = posts.groupBy("term")
           .agg(count(lit(1)).cast("double").as("_df"))
         posts.join(broadcast(dfreq), Seq("term"))

@@ -253,18 +253,6 @@ object VectorIndex {
         (r.getAs[Double]("n"), r.getAs[Int]("nlist"))
     }
 
-  /** A committed tombstone batch's charged n — driver-side doc read
-    * with the legacy parquet fallback.
-    */
-  private def readDelN(spark: SparkSession, del: String): Double =
-    SegmentStore.readDocDir(fsOf(spark, del), s"$del/stats") match {
-      case Some(doc) => SegmentStore.docDouble(doc, "n")
-      case None =>
-        SegmentStore.labeled(spark, "vec: legacy tomb stats read")(
-          spark.read.parquet(s"$del/stats").collect().head)
-          .getAs[Double]("n")
-    }
-
   // ---- lifecycle ---------------------------------------------------
 
   /** Create a FRESH index at `indexPath`: train the quantizer on
@@ -342,7 +330,7 @@ object VectorIndex {
     // would treat as a full-rewrite trigger
     if (nReq == 0) return
     val hitRow = liveIdFrames(spark, segs,
-        SegmentStore.committedDeletes(spark, indexPath))
+        SegmentStore.tombstones(spark, indexPath))
       .map(_.join(del, Seq("id"), "left_semi"))
       .reduce(_ unionByName _)
       .agg(count(lit(1)).as("n"), count_distinct(col("id")).as("d")).head()
@@ -413,7 +401,7 @@ object VectorIndex {
       val ids = docs.select(col(idCol).as("id")).distinct()
         .localCheckpoint(true)
       val hits = liveIdFrames(spark, segs,
-          SegmentStore.committedDeletes(spark, indexPath))
+          SegmentStore.tombstones(spark, indexPath))
         .map(_.join(ids, Seq("id"), "left_semi"))
         .reduce(_ unionByName _)
         .localCheckpoint(true)
@@ -432,8 +420,10 @@ object VectorIndex {
     * union).
     */
   private def liveIdFrames(spark: SparkSession, segs: Seq[String],
-                           dels: Seq[String]): Seq[DataFrame] =
-    SegmentStore.liveLedgerFrames(spark, segs, dels, "ids")
+                           dels: Seq[SegmentStore.Tombstone]): Seq[DataFrame] =
+    SegmentStore.liveLedgerFrames(segs.map(s =>
+      new org.apache.hadoop.fs.Path(s).getName ->
+        SegmentStore.readLedger(spark, s"$s/ids", None)), dels)
 
   /** Exactly-once per-batch streaming ingest (append-only feeds) —
     * the [[InvertedIndex.ingestBatch]] discipline: batch-id-named
@@ -634,7 +624,7 @@ object VectorIndex {
     val segs = SegmentStore.committedSegments(spark, indexPath)
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val dels = SegmentStore.tombstones(spark, indexPath)
     val live = liveVectors(spark, segs, dels, identity)
       .select(col("id"), col("v"))
     if (live.limit(1).count() == 0) {
@@ -651,7 +641,7 @@ object VectorIndex {
     val seg = s"$indexPath/segments/$name"
     val inputs =
       segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-      dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
+      dels.map(d => s"deletes/${d.name}")
     // the manifest lands before ANY bytes (quantizer-next included):
     // a crash at any later point leaves a manifest whose uncommitted
     // branch in [[heal]] rolls back both the staged quantizer and the
@@ -691,7 +681,7 @@ object VectorIndex {
     require(fs.rename(new org.apache.hadoop.fs.Path(nextPath),
       new org.apache.hadoop.fs.Path(quantizerPath(indexPath))),
       s"quantizer promotion rename failed in $indexPath")
-    (segs ++ dels).foreach(s =>
+    (segs ++ dels.map(_.path)).foreach(s =>
       fs.delete(new org.apache.hadoop.fs.Path(s), true))
     Manifest.delete(fs, rebuildManifestPath(indexPath))
   }
@@ -710,7 +700,7 @@ object VectorIndex {
     val fs = fsOf(spark, indexPath)
     SegmentStore.sweepUncommitted(fs, indexPath)
     val segs = SegmentStore.committedSegments(spark, indexPath)
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val dels = SegmentStore.tombstones(spark, indexPath)
     if (segs.length > 1 || (dels.nonEmpty && segs.nonEmpty)) {
       val nlist = readVecStats(spark, segs.head)._2
       // live vectors stay a LAZY plan — the merged write is its one
@@ -736,7 +726,7 @@ object VectorIndex {
       val seg = s"$indexPath/segments/$name"
       val inputs =
         segs.map(s => "segments/" + new org.apache.hadoop.fs.Path(s).getName) ++
-        dels.map(d => "deletes/" + new org.apache.hadoop.fs.Path(d).getName)
+        dels.map(d => s"deletes/${d.name}")
       Manifest.write(fs, SegmentStore.manifestPath(indexPath),
         s"segments/$name" +: inputs)
       live.repartition(nlist, col("cell"))
@@ -771,7 +761,7 @@ object VectorIndex {
             .parquet(s"$seg/codes")
         }.toSeq)
       writeVecStats(spark, seg, n.toDouble, nlist)
-      (segs ++ dels).foreach(s =>
+      (segs ++ dels.map(_.path)).foreach(s =>
         fs.delete(new org.apache.hadoop.fs.Path(s), true))
       Manifest.delete(fs, SegmentStore.manifestPath(indexPath))
     }
@@ -784,7 +774,7 @@ object VectorIndex {
     * planning time), tombstones subtracted segment-scoped.
     */
   private def liveVectors(spark: SparkSession, segs: Seq[String],
-                          dels: Seq[String],
+                          dels: Seq[SegmentStore.Tombstone],
                           prune: DataFrame => DataFrame): DataFrame =
     liveSub(spark, segs, dels, "vectors", prune)
 
@@ -794,7 +784,7 @@ object VectorIndex {
     * segment-scoped.
     */
   private def liveSub(spark: SparkSession, segs: Seq[String],
-                      dels: Seq[String], sub: String,
+                      dels: Seq[SegmentStore.Tombstone], sub: String,
                       prune: DataFrame => DataFrame): DataFrame = {
     val tagged = segs.map(s =>
       prune(spark.read.parquet(s"$s/$sub"))
@@ -803,7 +793,7 @@ object VectorIndex {
     val out =
       if (dels.isEmpty) tagged
       else tagged.join(
-        broadcast(SegmentStore.tombstonePairs(spark, dels)),
+        broadcast(SegmentStore.tombstonePairs(dels)),
         Seq("id", "_seg"), "left_anti")
     out.drop("_seg")
   }
@@ -829,11 +819,11 @@ object VectorIndex {
     val segs = SegmentStore.committedSegments(spark, indexPath)
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val dels = SegmentStore.tombstones(spark, indexPath)
     // driver-side doc reads of the per-dir stats sidecars (the
     // InvertedIndex.liveStats shape) — zero Spark jobs
     val segStats = segs.map(readVecStats(spark, _))
-    val delN = dels.map(readDelN(spark, _)).sum
+    val delN = dels.map(_.charge("n")).sum
     val segN = segStats.map(_._1).sum
     val nlist = segStats.head._2
     // live per-cell occupancy: ≤ nlist rows to the driver, zero-filled
@@ -900,7 +890,7 @@ object VectorIndex {
     val segs = SegmentStore.committedSegments(spark, indexPath)
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val dels = SegmentStore.tombstones(spark, indexPath)
     val centroids = readCentroids(spark, indexPath)
     val nlist = centroids.length
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
@@ -972,7 +962,7 @@ object VectorIndex {
     val segs = SegmentStore.committedSegments(spark, indexPath)
     require(segs.nonEmpty,
       s"$indexPath has no committed segments — build() first")
-    val dels = SegmentStore.committedDeletes(spark, indexPath)
+    val dels = SegmentStore.tombstones(spark, indexPath)
     val model = readPqModel(spark, indexPath).getOrElse(
       throw new IllegalArgumentException(
         s"$indexPath was built without PQ codes — build(pqM > 0) " +

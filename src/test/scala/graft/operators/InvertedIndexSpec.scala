@@ -33,6 +33,38 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(viaIndex.nonEmpty)
   }
 
+  test("null-text docs: index scores equal bm25TopK across the lifecycle") {
+    // a null text has no length: the scan averages lengths over the
+    // non-null docs while N counts every doc — the index must too,
+    // through tombstone charges and the compacted stats
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, text STRING")
+    def frame(rows: Seq[(Long, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, t) =>
+        org.apache.spark.sql.Row(i, t) }), schema)
+    val base = Seq((1L, "alpha beta beta"), (2L, null), (3L, "alpha"),
+      (4L, ""), (5L, null), (6L, "beta gamma alpha alpha"),
+      (7L, "gamma"))
+    val path = tmp("graft-idx-nulltext")
+    InvertedIndex.build(frame(base), "doc_id", "text", path)
+    val terms = Seq("alpha", "beta", "gamma")
+    def check(live: Seq[(Long, String)]): Unit =
+      assert(topDocs(InvertedIndex.searchTopK(spark, path, terms, k = 10,
+        idColName = "doc_id")) ==
+        topDocs(Ranking.bm25TopK(frame(live), "doc_id", "text", terms,
+          k = 10)))
+    check(base)
+    val upserts = Seq((3L, null: String), (8L, "alpha gamma"), (9L, null))
+    InvertedIndex.upsertDocs(frame(upserts), "doc_id", "text", path)
+    val afterUpsert = base.filterNot(_._1 == 3L) ++ upserts
+    check(afterUpsert)
+    InvertedIndex.deleteDocs(Seq(2L, 6L).toDF("doc_id"), path)
+    val afterDelete = afterUpsert.filterNot(d => Set(2L, 6L)(d._1))
+    check(afterDelete)
+    InvertedIndex.compact(spark, path)
+    check(afterDelete)
+  }
+
   test("searchAfter tiles exactly: pages concatenate to the full " +
       "ranking, no overlap, no gap — including across score ties") {
     val docs = Seq(
@@ -950,47 +982,38 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(idsAA(3) == Set(4L))
   }
 
-  test("appending into a pre-positions index mixes stats schemas " +
-      "without breaking reads (backward compat)") {
-    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
-    val path = tmp("graft-idx-oldstats")
-    InvertedIndex.build(docs.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", path)
-    // fabricate a pre-round-9 LEGACY segment: a parquet stats table
-    // (the pre-r17-opt layout) with no `positions` column (3-column
-    // schema) — the reader must fall back from the JSON sidecar
-    val seg = segDirs(path).head.toString
+  test("a segment without the store format fails loudly: rebuild") {
+    val docs = Seq((1L, "spark hash"), (2L, "hash join")).toDF("doc_id", "text")
+    val path = tmp("graft-idx-format")
+    InvertedIndex.build(docs, "doc_id", "text", path)
+    val stats = java.nio.file.Paths.get(s"${segDirs(path).head}/stats/doc.json")
     val doc = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$seg/stats/doc.json")),
+      java.nio.file.Files.readAllBytes(stats),
       java.nio.charset.StandardCharsets.UTF_8))
-    def d(f: String): Double = (doc \ f) match {
-      case org.json4s.JDouble(v) => v
-      case org.json4s.JInt(v) => v.toDouble
-      case other => fail(s"stats doc field $f not numeric: $other")
+    def rewrite(d: org.json4s.JValue): Unit = {
+      // the local file system's checksum sidecar would reject the edit
+      java.nio.file.Files.deleteIfExists(stats.resolveSibling(".doc.json.crc"))
+      java.nio.file.Files.write(stats, org.json4s.jackson.JsonMethods
+        .compact(org.json4s.jackson.JsonMethods.render(d))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // a fresh marker is a new commit generation: the rewritten doc
+      // is what the next read opens
+      val marker = new java.io.File(s"${segDirs(path).head}/stats/_SUCCESS")
+      marker.setLastModified(marker.lastModified() + 2000)
+      ()
     }
-    Seq((d("n"), d("sum_len"), d("buckets").toInt))
-      .toDF("n", "sum_len", "buckets")
-      .write.mode("overwrite").parquet(s"$seg/stats")
-    // an append with CURRENT code writes 4-column stats — the index
-    // now legitimately holds both generations
-    InvertedIndex.append(docs.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", path)
-    val terms = Seq("spark", "hash")
-    val mixed = topDocs(InvertedIndex.searchTopK(spark, path, terms,
-      k = 15, idColName = "doc_id"))
-    val pathOne = tmp("graft-idx-oldstats-one")
-    InvertedIndex.build(docs, "doc_id", "text", pathOne)
-    assert(mixed == topDocs(InvertedIndex.searchTopK(spark, pathOne,
-      terms, k = 15, idColName = "doc_id")))
-    // stats()/termStats() walk the same union; phrase refuses cleanly
-    // (the missing column reads as positions = false, as documented)
-    assert(InvertedIndex.stats(spark, path).collect().nonEmpty)
-    assert(InvertedIndex.termStats(spark, path, terms)
-      .collect().nonEmpty)
-    assert(intercept[IllegalArgumentException] {
-      InvertedIndex.phraseSearch(spark, path, Seq("spark", "hash"))
-    }.getMessage.contains("without positional postings"))
+    // a store written before the format field (the r17 JSON layout),
+    // and one from an unknown later format
+    for (d <- Seq(doc.removeField(_._1 == "format"),
+                  doc.replace(List("format"), org.json4s.JInt(99)))) {
+      rewrite(d)
+      val e = intercept[IllegalStateException](
+        InvertedIndex.searchTopK(spark, path, Seq("hash"), k = 2))
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    rewrite(doc)
+    assert(topDocs(InvertedIndex.searchTopK(spark, path, Seq("hash"),
+      k = 2, idColName = "doc_id")).map(_._1).toSet == Set(1L, 2L))
   }
 
   test("query-term lowercasing is locale-independent (Turkish-I safe)") {
